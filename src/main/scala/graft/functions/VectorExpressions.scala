@@ -146,6 +146,30 @@ object SignPack {
   }
 }
 
+/** The model-dimension guard of the model-baked expressions: a vector
+  * whose length differs from the baked model's (an [[graft.ops.VectorOps]]
+  * index trained for another embedder) fails loudly, naming both
+  * dimensions, instead of scoring a truncated prefix. Called from the
+  * interpreted path and, through the static forwarder, from generated
+  * code.
+  */
+private[functions] object ModelDim {
+  def check(expr: String, got: Int, want: Int): Unit =
+    if (got != want) throw new IllegalArgumentException(
+      s"$expr: vector dimension $got does not match the model dimension $want")
+
+  /** The generated-code twin of [[check]]. */
+  def code(expr: String, got: String, want: Int): String =
+    s"""graft.functions.ModelDim.check("$expr", $got, $want);"""
+
+  /** The common row length of a centroid matrix. */
+  def of(centroids: Array[Array[Double]]): Int = {
+    val dim = centroids.head.length
+    require(centroids.forall(_.length == dim), "ragged centroid matrix")
+    dim
+  }
+}
+
 /** Nearest-centroid index by squared L2, over a centroid matrix baked into
   * the expression (ties → lowest index). One fused loop per row inside
   * WholeStageCodegen — the k-means assignment step as a PURE MAP.
@@ -163,6 +187,7 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
     extends UnaryExpression with ExpectsInputTypes {
 
   require(centroids.nonEmpty, "centroids must be non-empty")
+  private val dim = ModelDim.of(centroids)
 
   override def nullIntolerant: Boolean = true
   override def inputTypes = Seq(ArrayType(DoubleType))
@@ -179,14 +204,14 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
 
   override protected def nullSafeEval(input: Any): Any = {
     val q = input.asInstanceOf[ArrayData]
+    ModelDim.check(prettyName, q.numElements(), dim)
     var best = 0
     var bestScore = Double.PositiveInfinity
     var ci = 0
     while (ci < centroids.length) {
       val cv = centroids(ci)
-      val n = math.min(q.numElements(), cv.length)
       var dot = 0.0; var i = 0
-      while (i < n) { dot += q.getDouble(i) * cv(i); i += 1 }
+      while (i < dim) { dot += q.getDouble(i) * cv(i); i += 1 }
       val score = cn2s(ci) - 2.0 * dot
       if (score < bestScore) { bestScore = score; best = ci }
       ci += 1
@@ -202,18 +227,17 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
       val bestScore = ctx.freshName("bestScore")
       val ci = ctx.freshName("ci")
       val cv = ctx.freshName("cv")
-      val n = ctx.freshName("n")
       val dot = ctx.freshName("dot")
       val i = ctx.freshName("i")
       val score = ctx.freshName("score")
       s"""
+         |${ModelDim.code(prettyName, s"$q.numElements()", dim)}
          |int $best = 0;
          |double $bestScore = Double.POSITIVE_INFINITY;
          |for (int $ci = 0; $ci < $cents.length; $ci++) {
          |  double[] $cv = $cents[$ci];
-         |  int $n = java.lang.Math.min($q.numElements(), $cv.length);
          |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
+         |  for (int $i = 0; $i < $dim; $i++) {
          |    $dot += $q.getDouble($i) * $cv[$i];
          |  }
          |  double $score = $cn2[$ci] - 2.0d * $dot;
@@ -241,6 +265,7 @@ case class NearestCentroids(
   require(centroids.nonEmpty, "centroids must be non-empty")
   require(nAssign >= 1 && nAssign <= centroids.length,
     "nAssign must be in [1, k]")
+  private val dim = ModelDim.of(centroids)
 
   override def nullIntolerant: Boolean = true
   override def inputTypes = Seq(ArrayType(DoubleType))
@@ -256,14 +281,14 @@ case class NearestCentroids(
 
   override protected def nullSafeEval(input: Any): Any = {
     val q = input.asInstanceOf[ArrayData]
+    ModelDim.check(prettyName, q.numElements(), dim)
     val bestIdx = new Array[Int](nAssign)
     val bestScore = Array.fill(nAssign)(Double.PositiveInfinity)
     var ci = 0
     while (ci < centroids.length) {
       val cv = centroids(ci)
-      val n = math.min(q.numElements(), cv.length)
       var dot = 0.0; var i = 0
-      while (i < n) { dot += q.getDouble(i) * cv(i); i += 1 }
+      while (i < dim) { dot += q.getDouble(i) * cv(i); i += 1 }
       val score = cn2s(ci) - 2.0 * dot
       // insertion: strict < keeps earlier (lower) index on ties
       var j = nAssign - 1
@@ -286,20 +311,19 @@ case class NearestCentroids(
       val bestScore = ctx.freshName("bestScore")
       val ci = ctx.freshName("ci")
       val cv = ctx.freshName("cv")
-      val n = ctx.freshName("n")
       val dot = ctx.freshName("dot")
       val i = ctx.freshName("i")
       val j = ctx.freshName("j")
       val score = ctx.freshName("score")
       s"""
+         |${ModelDim.code(prettyName, s"$q.numElements()", dim)}
          |int[] $bestIdx = new int[$nAssign];
          |double[] $bestScore = new double[$nAssign];
          |java.util.Arrays.fill($bestScore, Double.POSITIVE_INFINITY);
          |for (int $ci = 0; $ci < $cents.length; $ci++) {
          |  double[] $cv = $cents[$ci];
-         |  int $n = java.lang.Math.min($q.numElements(), $cv.length);
          |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
+         |  for (int $i = 0; $i < $dim; $i++) {
          |    $dot += $q.getDouble($i) * $cv[$i];
          |  }
          |  double $score = $cn2[$ci] - 2.0d * $dot;
@@ -334,6 +358,7 @@ case class CentroidDot(
     extends BinaryExpression with ExpectsInputTypes {
 
   require(centroids.nonEmpty, "centroids must be non-empty")
+  private val dim = ModelDim.of(centroids)
 
   override def nullIntolerant: Boolean = true
   override def inputTypes = Seq(ArrayType(DoubleType), IntegerType)
@@ -342,10 +367,10 @@ case class CentroidDot(
 
   override protected def nullSafeEval(v: Any, idx: Any): Any = {
     val q = v.asInstanceOf[ArrayData]
+    ModelDim.check(prettyName, q.numElements(), dim)
     val cv = centroids(idx.asInstanceOf[Int])
-    val n = math.min(q.numElements(), cv.length)
     var s = 0.0; var i = 0
-    while (i < n) { s += q.getDouble(i) * cv(i); i += 1 }
+    while (i < dim) { s += q.getDouble(i) * cv(i); i += 1 }
     s
   }
 
@@ -353,14 +378,13 @@ case class CentroidDot(
     nullSafeCodeGen(ctx, ev, (q, idx) => {
       val cents = ctx.addReferenceObj("centroids", centroids, "double[][]")
       val cv = ctx.freshName("cv")
-      val n = ctx.freshName("n")
       val s = ctx.freshName("s")
       val i = ctx.freshName("i")
       s"""
+         |${ModelDim.code(prettyName, s"$q.numElements()", dim)}
          |double[] $cv = $cents[$idx];
-         |int $n = java.lang.Math.min($q.numElements(), $cv.length);
          |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
+         |for (int $i = 0; $i < $dim; $i++) {
          |  $s += $q.getDouble($i) * $cv[$i];
          |}
          |${ev.value} = $s;
@@ -384,6 +408,7 @@ case class CentroidResidual(
     extends BinaryExpression with ExpectsInputTypes {
 
   require(centroids.nonEmpty, "centroids must be non-empty")
+  private val dim = ModelDim.of(centroids)
 
   override def nullIntolerant: Boolean = true
   override def inputTypes = Seq(ArrayType(DoubleType), IntegerType)
@@ -392,14 +417,11 @@ case class CentroidResidual(
 
   override protected def nullSafeEval(v: Any, idx: Any): Any = {
     val q = v.asInstanceOf[ArrayData]
+    ModelDim.check(prettyName, q.numElements(), dim)
     val cv = centroids(idx.asInstanceOf[Int])
-    val n = q.numElements()
-    val out = new Array[Double](n)
+    val out = new Array[Double](dim)
     var i = 0
-    while (i < n) {
-      out(i) = q.getDouble(i) - (if (i < cv.length) cv(i) else 0.0)
-      i += 1
-    }
+    while (i < dim) { out(i) = q.getDouble(i) - cv(i); i += 1 }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
@@ -407,15 +429,14 @@ case class CentroidResidual(
     nullSafeCodeGen(ctx, ev, (q, idx) => {
       val cents = ctx.addReferenceObj("centroids", centroids, "double[][]")
       val cv = ctx.freshName("cv")
-      val n = ctx.freshName("n")
       val out = ctx.freshName("out")
       val i = ctx.freshName("i")
       s"""
+         |${ModelDim.code(prettyName, s"$q.numElements()", dim)}
          |double[] $cv = $cents[$idx];
-         |int $n = $q.numElements();
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $out[$i] = $q.getDouble($i) - ($i < $cv.length ? $cv[$i] : 0.0d);
+         |double[] $out = new double[$dim];
+         |for (int $i = 0; $i < $dim; $i++) {
+         |  $out[$i] = $q.getDouble($i) - $cv[$i];
          |}
          |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
        """.stripMargin
@@ -447,7 +468,8 @@ case class Sq8Encode(
 
   override protected def nullSafeEval(v: Any): Any = {
     val q = v.asInstanceOf[ArrayData]
-    val n = math.min(q.numElements(), mins.length)
+    ModelDim.check(prettyName, q.numElements(), mins.length)
+    val n = mins.length
     val out = new Array[Byte](n)
     var i = 0
     while (i < n) {
@@ -467,7 +489,8 @@ case class Sq8Encode(
       val i = ctx.freshName("i")
       val c = ctx.freshName("c")
       s"""
-         |int $n = java.lang.Math.min($q.numElements(), $mn.length);
+         |${ModelDim.code(prettyName, s"$q.numElements()", mins.length)}
+         |int $n = $mn.length;
          |byte[] $out = new byte[$n];
          |for (int $i = 0; $i < $n; $i++) {
          |  double $c = java.lang.Math.rint(

@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
+
+import graft.functions.{VectorExpressions => V}
 
 /** Embedding-vector similarity operators.
   *
@@ -12,6 +14,25 @@ import org.apache.spark.sql.expressions.Window
   * are bit-identical between Spark's partial aggregation and any oracle —
   * cosine = dot / sqrt(na*nb) then differs by zero, making similarity
   * thresholds and top-k orderings deterministic.
+  *
+  * Every search entry point (the `knn*` family, [[hardNegatives]] and
+  * their standing-index variants) is a preset over ONE retrieval
+  * skeleton, the FAISS index-factory decomposition (Douze et al.,
+  * arXiv:2401.08281), after the probe/corpus projection step
+  * ([[probeSide]] / [[corpusSide]]):
+  *  - candidate source: all rows (a cross join against the broadcast
+  *    probes), IVF probed lists ([[probedLists]]) or LSH buckets
+  *    ([[candidatePairs]]);
+  *  - code: exact cosine ([[exactCos]]), PQ lookup tables + ADC sum
+  *    ([[withLuts]] / [[adcSum]]) or SQ8 bytes ([[withSq8Terms]] /
+  *    [[sq8Approx]]), all scored by [[scorePairs]] with the self-pair
+  *    filter;
+  *  - selector: the exact top-k window ([[topK]]) or, for approximate
+  *    codes, the refine selector ([[refineSet]]: bounded heaps in query
+  *    mode, the finite-filtered window in batch mode);
+  *  - exact re-rank of the refine set ([[rerank]]).
+  * Catalyst plans the same DataFrame whichever helper builds it, so the
+  * presets cost nothing over hand-written plans.
   *
   * All expressions are codegen'd column functions (zip_with/aggregate);
   * no UDFs.
@@ -28,7 +49,7 @@ object VectorOps {
     * slower on the pairwise hot path.
     */
   def dot(a: Column, b: Column): Column =
-    graft.functions.VectorExpressions.dot(a, b)
+    V.dot(a, b)
 
   /** Squared L2 norm of a quantized vector. */
   def norm2(v: Column): Column = dot(v, v)
@@ -45,6 +66,251 @@ object VectorOps {
   /** Cosine similarity from quantized vectors + precomputed squared norms. */
   def cosine(dotAb: Column, n2a: Column, n2b: Column): Column =
     dotAb / sqrt(n2a * n2b)
+
+  /** Projection step: `idCol` as `id`, an optional (label, renamed) column,
+    * and the quantized vector as `q`.
+    */
+  private def quantizedAs(
+      df: DataFrame, idCol: String, vecCol: String, id: String, q: String,
+      label: Option[(String, String)] = None): DataFrame =
+    df.select(col(idCol).as(id) +:
+      label.map { case (l, as) => col(l).as(as) }.toSeq :+
+      quantize(col(vecCol)).as(q): _*)
+
+  /** [[quantizedAs]] plus the squared norm as `n2`. */
+  private def vectors(
+      df: DataFrame, idCol: String, vecCol: String, id: String, q: String,
+      n2: String, label: Option[(String, String)] = None): DataFrame =
+    quantizedAs(df, idCol, vecCol, id, q, label).withColumn(n2, norm2(col(q)))
+
+  /** Probe side of every search: (probe_id, [p_label], pq, pn2). The
+    * caller decides whether to [[spread]] the frame first.
+    */
+  private def probeSide(df: DataFrame, idCol: String, vecCol: String,
+      label: Option[String] = None): DataFrame =
+    vectors(df, idCol, vecCol, "probe_id", "pq", "pn2",
+      label.map(_ -> "p_label"))
+
+  /** (corpus_id, [c_label], cq) — the internal projection the index
+    * trainers sample and the index encoders assign.
+    */
+  private def corpusCodes(df: DataFrame, idCol: String, vecCol: String,
+      label: Option[String] = None): DataFrame =
+    quantizedAs(df, idCol, vecCol, "corpus_id", "cq", label.map(_ -> "c_label"))
+
+  /** Corpus side of every search: (corpus_id, [c_label], cq, cn2). */
+  private def corpusSide(df: DataFrame, idCol: String, vecCol: String,
+      label: Option[String] = None): DataFrame =
+    corpusCodes(df, idCol, vecCol, label).withColumn("cn2", norm2(col("cq")))
+
+  /** Candidate-source step: corpus rows paired with probe rows — all of
+    * them (no `key`: a cross join against the broadcast probes), or those
+    * sharing an IVF list / LSH bucket `key` (an equi-join whose probe side
+    * broadcasts in query mode and shuffles in batch mode).
+    */
+  private def candidatePairs(c: DataFrame, p: DataFrame,
+      key: Option[String] = None, broadcastProbes: Boolean = true): DataFrame =
+    key.fold(c.crossJoin(broadcast(p)))(k =>
+      c.join(if (broadcastProbes) broadcast(p) else p, k))
+
+  /** The IVF candidate source's probe rows: the `keep` columns once per
+    * probed list (`list`, the probe's `nProbe` nearest unit centroids —
+    * one fused argmin map per probe).
+    */
+  private def probedLists(p: DataFrame, keep: Seq[String],
+      mat: Array[Array[Double]], nProbe: Int): DataFrame =
+    p.select(keep.map(col) :+
+      explode(V.nearestCentroids(col("pq"), mat, nProbe)).as("list"): _*)
+
+  /** Scoring step: (probe_id, corpus_id, [keep], score) over candidate
+    * pairs; self-pairs — and with `labels`, same-label pairs, the
+    * hard-negative JOIN predicate — are dropped before scoring.
+    */
+  private def scorePairs(pairs: DataFrame, score: Column,
+      labels: Boolean = false, keep: Seq[String] = Nil): DataFrame = {
+    val kept = pairs.filter(col("probe_id") =!= col("corpus_id"))
+    (if (labels) kept.filter(!(col("p_label") <=> col("c_label"))) else kept)
+      .select(Seq(col("probe_id"), col("corpus_id")) ++ keep.map(col) :+
+        score: _*)
+  }
+
+  /** Exact code: the cosine of the quantized probe and corpus vectors. */
+  private def exactCos: Column =
+    cosine(dot(col("pq"), col("cq")), col("pn2"), col("cn2")).as("cos")
+
+  /** Finite-score predicate of the ANN paths. A zero-norm corpus vector
+    * makes its score non-finite (NaN sorts as LARGEST in Spark, so it
+    * would squat at the top of every probed list); one predicate excludes
+    * NaN, NULL and both infinities. The brute paths do not apply it.
+    */
+  private def finite(score: String): Column =
+    abs(col(score)) < lit(Double.PositiveInfinity)
+
+  /** PQ code: per-subspace codebooks, Lloyd's over the sample's subvectors
+    * (`m` slices of dim/m).
+    */
+  private def trainCodebooks(rows: Array[Array[Double]], m: Int,
+      codebookSize: Int): Array[Array[Array[Double]]] = {
+    val dim = rows.head.length
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    val sub = dim / m
+    Array.tabulate(m)(j => lloydLocal(
+      rows.map(_.slice(j * sub, (j + 1) * sub)), codebookSize, TrainIters))
+  }
+
+  /** PQ encode: code0..code{m-1}, one fused argmin map per subspace over
+    * the sliced `src` vector.
+    */
+  private def pqEncode(df: DataFrame, src: String,
+      codebooks: Array[Array[Array[Double]]]): DataFrame = {
+    val sub = codebooks.head.head.length
+    codebooks.indices.foldLeft(df) { (d, j) =>
+      d.withColumn(s"code$j",
+        V.nearestCentroid(slice(col(src), j * sub + 1, sub), codebooks(j)))
+    }
+  }
+
+  /** PQ probe lookup tables: lut0..lut{m-1}, dot(probe subvector,
+    * codeword) for every codeword of each subspace.
+    */
+  private def withLuts(
+      p: DataFrame, codebooks: Array[Array[Array[Double]]]): DataFrame = {
+    val sub = codebooks.head.head.length
+    codebooks.indices.foldLeft(p) { (df, j) =>
+      df.withColumn(s"lut$j", array(codebooks(j).map(cw =>
+        dot(slice(col("pq"), j * sub + 1, sub), typedlit(cw.toSeq))): _*))
+    }
+  }
+
+  /** PQ ADC: the sum of m table lookups on a corpus row's codes — the
+    * approximate dot product, no vector math per pair.
+    */
+  private def adcSum(m: Int): Column =
+    (0 until m).map(j => element_at(col(s"lut$j"), col(s"code$j") + 1))
+      .reduce(_ + _)
+
+  /** SQ8 probe precompute: the scalar base term dot(p, mins) and the
+    * delta-scaled probe vector `sp` (zip_with is CodegenFallback but runs
+    * once per PROBE, not per pair).
+    */
+  private def withSq8Terms(p: DataFrame, m: Sq8Model): DataFrame =
+    p.withColumn("base", dot(col("pq"), typedlit(m.mins.toSeq)))
+      .withColumn("sp",
+        zip_with(col("pq"), typedlit(m.deltas.toSeq), (a, b) => a * b))
+
+  /** SQ8 code: dot(p, decode(codes)) over the corpus norm — base plus the
+    * fused byte-unpack multiply-add per pair.
+    */
+  private def sq8Approx: Column =
+    ((col("base") + V.sq8Dot(col("sp"), col("codes"))) / sqrt(col("cn2")))
+      .as("approx")
+
+  /** The selector's order: per `key`, `score` descending, ties to the
+    * lowest `tie`.
+    */
+  private def ranked(key: String = "probe_id", score: String = "cos",
+      tie: String = "corpus_id"): WindowSpec =
+    Window.partitionBy(key).orderBy(col(score).desc, col(tie).asc)
+
+  /** Exact top-`n` selector: the rows ranked 1..n per key in [[ranked]]
+    * order, the rank kept in `rk`.
+    */
+  private def topK(df: DataFrame, n: Int, rk: String = "rk",
+      key: String = "probe_id", score: String = "cos",
+      tie: String = "corpus_id"): DataFrame =
+    df.withColumn(rk, row_number().over(ranked(key, score, tie)))
+      .filter(col(rk) <= n)
+
+  /** Refine selector: the top-`refine` (probe_id, corpus_id) pairs per
+    * probe by `approx`. Query mode (`broadcastProbes`): partition-local
+    * bounded heaps ([[topNPerKey]]; few keys, heap state keys×refine rows
+    * per task). Batch mode: probes are a large relation, so selection is
+    * the finite-filtered window, which distributes because rows-per-probe
+    * is bounded by the probed list sizes while heap state would be
+    * millions of keys per task.
+    */
+  private def refineSet(
+      scored: DataFrame, refine: Int, broadcastProbes: Boolean): DataFrame =
+    (if (broadcastProbes)
+      topNPerKey(scored, "probe_id", "approx", "corpus_id", refine)
+    else topK(scored.filter(finite("approx")), refine, "__rk",
+      score = "approx")).select("probe_id", "corpus_id")
+
+  /** Global top-`n` rows per `key` by (`score` desc, `tie` asc) WITHOUT
+    * window-sorting the full input: phase 1 keeps each partition's top-n
+    * per key in a bounded heap (mapPartitions, no shuffle — every global
+    * winner is necessarily one of its partition's local winners), phase 2
+    * ranks only the ≤ partitions×n survivors per key. The p06
+    * quota-sampling argument applied to scored candidates: the ADC scan's
+    * output is (probes × corpus) rows, and a plain `row_number` window
+    * here was exactly the one-task-per-probe full sort the ScaleProbe
+    * caught (100×1M rows: 25 → 12 s). Callers must project the input to
+    * the scalar (key, score, tie) triple first — mapPartitions
+    * deserializes every column it is given, and feeding the fat
+    * vector/LUT rows through the heaps cost more than the window sort it
+    * replaced (30 s). Heap memory per task is keys×n rows.
+    */
+  private def topNPerKey(
+      df: DataFrame, key: String, score: String, tie: String, n: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    val enc = org.apache.spark.sql.Encoders.row(df.schema)
+    val ki = df.schema.fieldIndex(key)
+    val si = df.schema.fieldIndex(score)
+    val ti = df.schema.fieldIndex(tie)
+    // max-heap on (-score, tie): root = smallest score / largest tie =
+    // the worst kept row, replaced when a better one arrives
+    val ord = Ordering.by[(Double, Long, Row), (Double, Long)] {
+      case (s, t, _) => (-s, t)
+    }
+    // non-finite scores break heap ordering — NaN fails both `s > ws` and
+    // `s == ws`, so such a row would squat in an underfull heap forever
+    val local = df.filter(finite(score)).mapPartitions { it =>
+      val heaps = scala.collection.mutable.Map
+        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long, Row)]]
+      it.foreach { r =>
+        val k = r.getLong(ki)
+        val s = r.getDouble(si)
+        val t = r.getLong(ti)
+        val h = heaps.getOrElseUpdate(k,
+          scala.collection.mutable.PriorityQueue.empty(ord))
+        if (h.size < n) h.enqueue((s, t, r))
+        else {
+          val (ws, wt, _) = h.head
+          if (s > ws || (s == ws && t < wt)) { h.dequeue(); h.enqueue((s, t, r)) }
+        }
+      }
+      heaps.valuesIterator.flatMap(_.iterator.map(_._3))
+    }(enc)
+    topK(local, n, "__rk", key, score, tie).drop("__rk")
+  }
+
+  /** Re-rank step: exact cosine top-`k` over a small (probe_id,
+    * corpus_id) candidate set — vectors re-attach via one narrow corpus
+    * join + a probe join (broadcast in query mode, shuffled when the probe
+    * set is a large relation), then a window over ≤ refine rows per probe.
+    */
+  private def rerank(
+      candidates: DataFrame, c: DataFrame, p: DataFrame, k: Int,
+      broadcastProbes: Boolean = true): DataFrame =
+    topK(candidates.join(c, "corpus_id")
+      .join(if (broadcastProbes) broadcast(p) else p, "probe_id")
+      .select(col("probe_id"), col("corpus_id"), exactCos), k)
+
+  /** The IVF search core: exact cosine top-k over each probe's `nProbe`
+    * probed lists of an assigned corpus (corpus_id, [c_label], cq, cn2,
+    * list). Non-finite cosines are dropped in both physical modes, which
+    * keeps batch/query equivalence.
+    */
+  private def ivfSearch(p: DataFrame, assigned: DataFrame,
+      mat: Array[Array[Double]], k: Int, nProbe: Int,
+      broadcastProbes: Boolean, labels: Boolean): DataFrame = {
+    val lists = probedLists(p,
+      Seq("probe_id", "pq", "pn2") ++ Option.when(labels)("p_label"),
+      mat, nProbe)
+    topK(scorePairs(
+      candidatePairs(assigned, lists, Some("list"), broadcastProbes),
+      exactCos, labels).filter(finite("cos")), k)
+  }
 
   /** Rows the ANN model-training sample is drawn from / the cap on
     * driver-held training data: the FAISS `train()` shape — centroids and
@@ -170,9 +436,7 @@ object VectorOps {
   def trainIvfModel(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int = 32): IvfModel =
-    trainIvfFrom(spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq")),
-      nCentroids)
+    trainIvfFrom(corpusCodes(spread(corpus), idCol, vecCol), nCentroids)
 
   /** [[trainIvfModel]] over the internal (corpus_id, cq) projection —
     * what index MAINTENANCE retrains from: the standing assigned table
@@ -197,20 +461,16 @@ object VectorOps {
   def assignLists(
       corpus: DataFrame, idCol: String, vecCol: String,
       model: IvfModel): DataFrame =
-    assignQuantized(spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq")),
-      model)
+    assignQuantized(corpusCodes(spread(corpus), idCol, vecCol), model)
 
   /** [[assignLists]] over the internal (corpus_id, cq) projection. */
   private[graft] def assignQuantized(
       c: DataFrame, model: IvfModel): DataFrame = {
     val mat = model.centroids
     c.withColumn("cn2", norm2(col("cq")))
-      .withColumn("list",
-        graft.functions.VectorExpressions.nearestCentroid(col("cq"), mat))
+      .withColumn("list", V.nearestCentroid(col("cq"), mat))
       .withColumn("resid", lit(1.0) -
-        graft.functions.VectorExpressions.centroidDot(
-          col("cq"), col("list"), mat) / sqrt(col("cn2")))
+        V.centroidDot(col("cq"), col("list"), mat) / sqrt(col("cn2")))
   }
 
   /** [[knnIvf]] over a PRE-ASSIGNED corpus ([[assignLists]] output): the
@@ -228,25 +488,9 @@ object VectorOps {
       k: Int,
       model: IvfModel,
       nProbe: Int = 8,
-      broadcastProbes: Boolean = true): DataFrame = {
-    val mat = model.centroids
-    val p = spread(probes)
-      .select(col(idCol).as("probe_id"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-    val probeLists = p.select(col("probe_id"), col("pq"), col("pn2"),
-      explode(graft.functions.VectorExpressions.nearestCentroids(
-        col("pq"), mat, nProbe)).as("list"))
-    val probeSide = if (broadcastProbes) broadcast(probeLists) else probeLists
-    val scored = assigned.join(probeSide, "list")
-      .filter(col("probe_id") =!= col("corpus_id"))
-      .select(col("probe_id"), col("corpus_id"),
-        cosine(dot(col("pq"), col("cq")), col("pn2"), col("cn2")).as("cos"))
-      .filter(abs(col("cos")) < lit(Double.PositiveInfinity))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-  }
+      broadcastProbes: Boolean = true): DataFrame =
+    ivfSearch(probeSide(spread(probes), idCol, vecCol), assigned,
+      model.centroids, k, nProbe, broadcastProbes, labels = false)
 
   /** A trained IVFPQ index model: the UN-normalized Lloyd list centroids
     * (assignment normalizes, residuals subtract the data-scale mean —
@@ -301,11 +545,9 @@ object VectorOps {
   def trainIvfPqModel(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int = 32, m: Int = 8, codebookSize: Int = 32,
-      residual: Boolean = true): IvfPqModel = {
-    val c = spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-    trainIvfPqFrom(c, nCentroids, m, codebookSize, residual)
-  }
+      residual: Boolean = true): IvfPqModel =
+    trainIvfPqFrom(corpusCodes(spread(corpus), idCol, vecCol), nCentroids, m,
+      codebookSize, residual)
 
   /** Shared trainer behind [[knnIvfPq]] and [[trainIvfPqModel]]; `c` is
     * the internal (corpus_id, cq) projection (index MAINTENANCE retrains
@@ -316,9 +558,6 @@ object VectorOps {
       c: DataFrame, nCentroids: Int, m: Int, codebookSize: Int,
       residual: Boolean): IvfPqModel = {
     val sampleRows = sampleVecs(c, trainSampleSize(nCentroids, codebookSize))
-    val dim = sampleRows.head.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
     // IVF centroids: k-means-trained. Assignment uses the NORMALIZED
     // matrix (L2-argmin over unit centroids = cosine-argmax, knnIvf);
     // residuals subtract the UN-normalized Lloyd mean — the centroid at
@@ -350,10 +589,8 @@ object VectorOps {
         val cv = rawCents(best)
         Array.tabulate(v.length)(i => v(i) - cv(i))
       }
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m)(j =>
-      lloydLocal(pqTrainRows.map(_.slice(j * sub, (j + 1) * sub)),
-        codebookSize, TrainIters))
-    IvfPqModel(rawCents, codebooks, residual)
+    IvfPqModel(rawCents, trainCodebooks(pqTrainRows, m, codebookSize),
+      residual)
   }
 
   /** Mean-pooled group embedding in long form (group, dim, mean): the
@@ -476,10 +713,7 @@ object VectorOps {
       model: IvfModel): DataFrame = {
     val mat = model.centroids
     require(mat.length >= 2, s"silhouette needs >= 2 centroids: ${mat.length}")
-    import graft.functions.{VectorExpressions => V}
-    spread(corpus)
-      .select(col(idCol).as("id"), quantize(col(vecCol)).as("q"))
-      .withColumn("n2", norm2(col("q")))
+    vectors(spread(corpus), idCol, vecCol, "id", "q", "n2")
       .filter(col("n2") > 0) // zero-norm: cosine undefined (knnIvf rule)
       .withColumn("nc", V.nearestCentroids(col("q"), mat, 2))
       .withColumn("a", lit(1.0) -
@@ -552,29 +786,19 @@ object VectorOps {
     // one corpus assignment + one probe pass at pMax (knnIvf's exact
     // conventions: same quantize/spread, same self-pair and non-finite
     // cosine exclusions, probe side broadcast)
-    val c = spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
-      .withColumn("list",
-        graft.functions.VectorExpressions.nearestCentroid(col("cq"), mat))
-    val p = spread(probes)
-      .select(col(idCol).as("probe_id"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-    val probeLists = p.select(col("probe_id"), col("pq"), col("pn2"),
-      posexplode(graft.functions.VectorExpressions.nearestCentroids(
-        col("pq"), mat, pMax)).as(Seq("pr", "list")))
-    val scored = c.join(broadcast(probeLists), "list")
-      .filter(col("probe_id") =!= col("corpus_id"))
-      .select(col("probe_id"), col("corpus_id"), col("pr"),
-        cosine(dot(col("pq"), col("cq")), col("pn2"), col("cn2")).as("cos"))
-      .filter(abs(col("cos")) < lit(Double.PositiveInfinity))
+    val c = corpusSide(spread(corpus), idCol, vecCol)
+      .withColumn("list", V.nearestCentroid(col("cq"), mat))
+    val probeLists = probeSide(spread(probes), idCol, vecCol)
+      .select(col("probe_id"), col("pq"), col("pn2"),
+        posexplode(V.nearestCentroids(col("pq"), mat, pMax))
+          .as(Seq("pr", "list")))
+    val scored = scorePairs(candidatePairs(c, probeLists, Some("list")),
+      exactCos, keep = Seq("pr")).filter(finite("cos"))
     // all sweep predecessor counts share ONE window sort; (cos desc,
     // corpus_id asc) is a strict total order per probe, so "< k
     // predecessors among pr < p rows" is row_number() <= k on the
     // pr < p subset, knnIvf's exact top-k rule
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val w = ranked().rowsBetween(Window.unboundedPreceding, -1)
     val withIn = sweep.foldLeft(scored) { (df, pp) =>
       df.withColumn(s"in_$pp", col("pr") < pp &&
         coalesce(sum(when(col("pr") < pp, 1L).otherwise(0L)).over(w),
@@ -639,13 +863,9 @@ object VectorOps {
       }
       best
     }
-    spread(corpus)
-      .select(col(idCol).as("id"), quantize(col(vecCol)).as("q"))
-      .select(col("id"),
-        graft.functions.VectorExpressions.nearestCentroid(col("q"), matOld)
-          .as("list_old"),
-        graft.functions.VectorExpressions.nearestCentroid(col("q"), matNew)
-          .as("list_new"))
+    quantizedAs(spread(corpus), idCol, vecCol, "id", "q")
+      .select(col("id"), V.nearestCentroid(col("q"), matOld).as("list_old"),
+        V.nearestCentroid(col("q"), matNew).as("list_new"))
       .withColumn("__mapped",
         element_at(typedlit(mapping), col("list_new") + 1))
       .groupBy(col("list_old").cast("long").as("list_old"))
@@ -666,9 +886,7 @@ object VectorOps {
       idCol: String,
       vecCol: String,
       tau: Double): DataFrame = {
-    val q = spread(df)
-      .select(col(idCol).as("id"), quantize(col(vecCol)).as("q"))
-      .withColumn("n2", norm2(col("q")))
+    val q = vectors(spread(df), idCol, vecCol, "id", "q", "n2")
     val a = q.as("a"); val b = q.as("b")
     a.join(b, col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -687,19 +905,9 @@ object VectorOps {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    val p = probes.select(col(idCol).as("probe_id"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-    val c = spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
-    val scored = c.crossJoin(broadcast(p))
-      .filter(col("probe_id") =!= col("corpus_id"))
-      .select(col("probe_id"), col("corpus_id"),
-        cosine(dot(col("pq"), col("cq")), col("pn2"), col("cn2")).as("cos"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    val p = probeSide(probes, idCol, vecCol)
+    topK(scorePairs(candidatePairs(corpusSide(spread(corpus), idCol, vecCol),
+      p), exactCos), k)
   }
 
   /** Intra-list diversity (ILD) of a retrieval result list — the METRIC
@@ -720,9 +928,7 @@ object VectorOps {
     */
   def ildDiversity(results: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    val vecs = corpus
-      .select(col(idCol).as("vid"), quantize(col(vecCol)).as("vq"))
-      .withColumn("vn2", norm2(col("vq")))
+    val vecs = vectors(corpus, idCol, vecCol, "vid", "vq", "vn2")
     val a = results.select(col("probe_id"), col("corpus_id").as("ia"))
     val b = results.select(col("probe_id"), col("corpus_id").as("ib"))
     val pairs = a.join(b, Seq("probe_id")).filter(col("ia") < col("ib"))
@@ -742,28 +948,6 @@ object VectorOps {
       .withColumn("ild", lit(1.0) - col("mean_sim"))
   }
 
-  /** MMR diversified re-ranking (Carbonell & Goldstein 1998): greedily
-    * select `kSel` of each probe's top-`kCand` exact candidates, each
-    * step maximizing `rel − max sim to already-selected` — the λ=1/2
-    * maximal-marginal-relevance objective up to a positive scale factor
-    * (argmax-invariant), so a near-duplicate of an already-picked result
-    * is displaced by the next DISTINCT relevant one. The missing
-    * diversity knob above the s01/s13 rankers: plain top-k hands a RAG
-    * prompt k copies of the corpus's most-duplicated passage.
-    *
-    * Deterministic by the repo's vector conventions: quantized integer
-    * dots, ONE IEEE division per cosine, the step score ONE subtraction
-    * of two such doubles, ties to min id — so the DuckDB oracle replays
-    * every greedy step CTE-for-CTE and the result is hash-exact.
-    *
-    * Scale shape: candidates come from a bounded ranker (here the exact
-    * brute baseline, kCand per probe — swap in [[knnIvf]] for the 100 TB
-    * candidate step); pairwise sims are kCand² per probe — bounded,
-    * never corpus×corpus; each greedy step is one fixed-width window
-    * argmax + one anti join + one equi join on (probe, candidate) rows.
-    * kSel is a literal loop bound (steps unroll into the plan), not a
-    * data-dependent iteration.
-    */
   /** Margin-based pair mining (Artetxe & Schwenk 2019 — the criterion
     * CCMatrix/LASER bitext mining runs at web scale): for each left
     * vector, score its forward top-`k` right candidates by
@@ -796,24 +980,12 @@ object VectorOps {
       vecCol: String,
       k: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val l = spread(left)
-      .select(col(idCol).as("lid"), quantize(col(vecCol)).as("lq"))
-      .withColumn("ln2", norm2(col("lq")))
-    val r = spread(right)
-      .select(col(idCol).as("rid"), quantize(col(vecCol)).as("rq"))
-      .withColumn("rn2", norm2(col("rq")))
-    val cosAll = r.crossJoin(broadcast(l))
-      .select(col("lid"), col("rid"),
-        cosine(dot(col("lq"), col("rq")), col("ln2"), col("rn2"))
-          .as("cos"))
-    val wF = Window.partitionBy("lid")
-      .orderBy(col("cos").desc, col("rid").asc)
-    val wB = Window.partitionBy("rid")
-      .orderBy(col("cos").desc, col("lid").asc)
-    val fwd = cosAll.withColumn("rk", row_number().over(wF))
-      .filter(col("rk") <= k)
-    val bwd = cosAll.withColumn("rk", row_number().over(wB))
-      .filter(col("rk") <= k)
+    val l = vectors(spread(left), idCol, vecCol, "lid", "lq", "ln2")
+    val r = vectors(spread(right), idCol, vecCol, "rid", "rq", "rn2")
+    val cosAll = candidatePairs(r, l).select(col("lid"), col("rid"),
+      cosine(dot(col("lq"), col("rq")), col("ln2"), col("rn2")).as("cos"))
+    val fwd = topK(cosAll, k, key = "lid", tie = "rid")
+    val bwd = topK(cosAll, k, key = "rid", tie = "lid")
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
     val avgL = fwd.groupBy("lid")
       .agg((sum(col("cos").cast(dec)).cast("double") /
@@ -821,16 +993,36 @@ object VectorOps {
     val avgR = bwd.groupBy("rid")
       .agg((sum(col("cos").cast(dec)).cast("double") /
         count(lit(1))).as("avg_r"))
-    val wM = Window.partitionBy("lid")
-      .orderBy(col("margin").desc, col("rid").asc)
     fwd.join(avgL, Seq("lid")).join(avgR, Seq("rid"))
       .withColumn("margin",
         col("cos") / ((col("avg_l") + col("avg_r")) / 2))
-      .withColumn("mrk", row_number().over(wM))
+      .withColumn("mrk", row_number().over(ranked("lid", "margin", "rid")))
       .filter(col("mrk") === 1)
       .select(col("lid"), col("rid"), col("cos"), col("margin"))
   }
 
+  /** MMR diversified re-ranking (Carbonell & Goldstein 1998): greedily
+    * select `kSel` of each probe's top-`kCand` exact candidates, each
+    * step maximizing `rel − max sim to already-selected` — the λ=1/2
+    * maximal-marginal-relevance objective up to a positive scale factor
+    * (argmax-invariant), so a near-duplicate of an already-picked result
+    * is displaced by the next DISTINCT relevant one. The missing
+    * diversity knob above the s01/s13 rankers: plain top-k hands a RAG
+    * prompt k copies of the corpus's most-duplicated passage.
+    *
+    * Deterministic by the repo's vector conventions: quantized integer
+    * dots, ONE IEEE division per cosine, the step score ONE subtraction
+    * of two such doubles, ties to min id — so the DuckDB oracle replays
+    * every greedy step CTE-for-CTE and the result is hash-exact.
+    *
+    * Scale shape: candidates come from a bounded ranker (here the exact
+    * brute baseline, kCand per probe — swap in [[knnIvf]] for the 100 TB
+    * candidate step); pairwise sims are kCand² per probe — bounded,
+    * never corpus×corpus; each greedy step is one fixed-width window
+    * argmax + one anti join + one equi join on (probe, candidate) rows.
+    * kSel is a literal loop bound (steps unroll into the plan), not a
+    * data-dependent iteration.
+    */
   def mmrRerank(
       probes: DataFrame,
       corpus: DataFrame,
@@ -841,9 +1033,7 @@ object VectorOps {
     require(kSel >= 1 && kCand >= kSel, s"bad shape: $kCand/$kSel")
     val cand = knnBrute(probes, corpus, idCol, vecCol, kCand)
       .select(col("probe_id"), col("corpus_id"), col("cos").as("rel"))
-    val cv = spread(corpus).select(col(idCol).as("cid"),
-        quantize(col(vecCol)).as("q"))
-      .withColumn("n2", norm2(col("q")))
+    val cv = vectors(spread(corpus), idCol, vecCol, "cid", "q", "n2")
     val withVec = cand.join(cv, cand("corpus_id") === cv("cid"))
     val x = withVec.select(col("probe_id"), col("corpus_id").as("xid"),
       col("q").as("xq"), col("n2").as("xn2"))
@@ -854,13 +1044,10 @@ object VectorOps {
       .select(col("probe_id"), col("xid"), col("yid"),
         cosine(dot(col("xq"), col("yq")), col("xn2"), col("yn2"))
           .as("sim"))
-    def pick(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("score").desc, col("corpus_id").asc)
-      df.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-        .select(col("probe_id"), col("corpus_id").as("sel_id"),
-          col("score"))
-    }
+    def pick(df: DataFrame): DataFrame =
+      df.withColumn("rk", row_number().over(ranked(score = "score")))
+        .filter(col("rk") === 1)
+        .select(col("probe_id"), col("corpus_id").as("sel_id"), col("score"))
     def removeSel(rem: DataFrame, sel: DataFrame): DataFrame =
       rem.join(sel.select(col("probe_id"),
           col("sel_id").as("corpus_id")),
@@ -908,21 +1095,10 @@ object VectorOps {
       vecCol: String,
       labelCol: String,
       k: Int): DataFrame = {
-    val p = probes.select(col(idCol).as("probe_id"),
-      col(labelCol).as("p_label"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-    val c = spread(corpus).select(col(idCol).as("corpus_id"),
-      col(labelCol).as("c_label"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
-    val scored = c.crossJoin(broadcast(p))
-      .filter(col("probe_id") =!= col("corpus_id") &&
-        !(col("p_label") <=> col("c_label")))
-      .select(col("probe_id"), col("corpus_id"),
-        cosine(dot(col("pq"), col("cq")), col("pn2"), col("cn2")).as("cos"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    val p = probeSide(probes, idCol, vecCol, Some(labelCol))
+    topK(scorePairs(candidatePairs(
+      corpusSide(spread(corpus), idCol, vecCol, Some(labelCol)), p),
+      exactCos, labels = true), k)
   }
 
   /** Embedding-space decontamination (r8): every train vector whose
@@ -944,19 +1120,13 @@ object VectorOps {
       idCol: String,
       vecCol: String,
       tau: Double): DataFrame = {
-    val c = spread(train)
-      .select(col(idCol).as("train_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
-    val p = evalDf
-      .select(col(idCol).as("eval_id"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-    val scored = c.crossJoin(broadcast(p))
+    val c = vectors(spread(train), idCol, vecCol, "train_id", "cq", "cn2")
+    val p = vectors(evalDf, idCol, vecCol, "eval_id", "pq", "pn2")
+    candidatePairs(c, p)
       .select(col("train_id"), col("eval_id"),
         cosine(dot(col("cq"), col("pq")), col("cn2"), col("pn2")).as("cos"))
       .filter(col("cos") >= tau)
-    val w = Window.partitionBy("train_id")
-      .orderBy(col("cos").desc, col("eval_id").asc)
-    scored.withColumn("rk", row_number().over(w))
+      .withColumn("rk", row_number().over(ranked("train_id", "cos", "eval_id")))
       .filter(col("rk") === 1).drop("rk")
   }
 
@@ -995,7 +1165,7 @@ object VectorOps {
     * be interpreted per plane per row).
     */
   def lshBucket(qvec: Column, planes: Int): Column =
-    graft.functions.VectorExpressions.signPack(qvec, planes)
+    V.signPack(qvec, planes)
 
   /** IVF (inverted-file) approximate top-k.
     *
@@ -1022,6 +1192,9 @@ object VectorOps {
     *    window distributes fine because rows-per-probe is bounded by the
     *    probed list sizes. Results are identical (spec-asserted); only
     *    the physical plan changes.
+    *
+    * The search itself is train + assign + the [[knnIvfPreAssigned]]
+    * core, with the optional hard-negative label threaded through.
     */
   def knnIvf(
       probes: DataFrame,
@@ -1036,15 +1209,12 @@ object VectorOps {
       model: Option[IvfModel] = None,
       excludeLabelCol: Option[String] = None): DataFrame = {
     val cSrc = spread(corpus)
-    val c = cSrc
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
     // the index (centroids) is trained on the FULL corpus — the standing
     // shared structure a per-query metadata predicate must not rebuild —
     // or supplied pre-trained (`model`): at scale index build is its own
     // job and every query run reloads via IvfModel.load
-    val mat = model.map(_.centroids).getOrElse(normalized(lloydLocal(
-      sampleVecs(c, trainSampleSize(nCentroids)), nCentroids, TrainIters)))
+    val mat = model.getOrElse(
+      trainIvfFrom(corpusCodes(cSrc, idCol, vecCol), nCentroids)).centroids
     // filtered search (`corpusFilter`, r7): the predicate is row-local
     // metadata, so filter-then-assign ≡ assign-then-filter — applying it
     // BEFORE assignment pushes it into the corpus scan (PlanSpec-asserted
@@ -1052,102 +1222,16 @@ object VectorOps {
     // Selective predicates thin each inverted list's matching density, so
     // callers raise nProbe to hold recall (RecallSpec gates the shipped
     // parameters against the filtered exact baseline)
-    val assigned = cSrc.filter(corpusFilter)
-      .select(col(idCol).as("corpus_id") +:
-        excludeLabelCol.map(l => col(l).as("c_label")).toSeq :+
-        quantize(col(vecCol)).as("cq"): _*)
-      .withColumn("cn2", norm2(col("cq")))
-      .withColumn("list",
-        graft.functions.VectorExpressions.nearestCentroid(col("cq"), mat))
-    // probe: nProbe nearest list indices per probe, one fused map
-    val p = spread(probes)
-      .select(col(idCol).as("probe_id") +:
-        excludeLabelCol.map(l => col(l).as("p_label")).toSeq :+
-        quantize(col(vecCol)).as("pq"): _*)
-      .withColumn("pn2", norm2(col("pq")))
-    val probeLists = p.select(
-      Seq(col("probe_id"), col("pq"), col("pn2")) ++
-        excludeLabelCol.map(_ => col("p_label")) :+
-        explode(graft.functions.VectorExpressions.nearestCentroids(
-          col("pq"), mat, nProbe)).as("list"): _*)
-    // exact cosine over the probed lists' union
-    val probeSide = if (broadcastProbes) broadcast(probeLists) else probeLists
-    // drop non-finite cosines (zero-norm corpus vector → NaN, which Spark
-    // sorts as LARGEST — it would squat at the top of every probed list's
-    // top-k) so all ANN ops agree on degenerate vectors; same predicate in
-    // both modes, keeping batch/query equivalence (knnPq/knnIvfPq apply
-    // the identical exclusion in topNPerKey / their batch window)
-    val joined0 = assigned.join(probeSide, "list")
-      .filter(col("probe_id") =!= col("corpus_id"))
+    val assigned =
+      corpusSide(cSrc.filter(corpusFilter), idCol, vecCol, excludeLabelCol)
+        .withColumn("list", V.nearestCentroid(col("cq"), mat))
     // hard-negative mode (`excludeLabelCol`): the label inequality is a
     // JOIN predicate (it references both sides), so it composes inside
     // the list join — applied BEFORE the top-k window, candidates fill k
     // from label-valid rows only and no over-fetch is needed; recall is
     // held by nProbe, exactly like corpusFilter's selectivity dial
-    val joined = excludeLabelCol.fold(joined0)(_ =>
-      joined0.filter(!(col("p_label") <=> col("c_label"))))
-    val scored = joined
-      .select(col("probe_id"), col("corpus_id"),
-        cosine(dot(col("pq"), col("cq")), col("pn2"), col("cn2")).as("cos"))
-      .filter(abs(col("cos")) < lit(Double.PositiveInfinity))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-  }
-
-  /** Global top-`n` rows per `key` by (`score` desc, `tie` asc) WITHOUT
-    * window-sorting the full input: phase 1 keeps each partition's top-n
-    * per key in a bounded heap (mapPartitions, no shuffle — every global
-    * winner is necessarily one of its partition's local winners), phase 2
-    * ranks only the ≤ partitions×n survivors per key. The p06
-    * quota-sampling argument applied to scored candidates: the ADC scan's
-    * output is (probes × corpus) rows, and a plain `row_number` window
-    * here was exactly the one-task-per-probe full sort the ScaleProbe
-    * caught (100×1M rows: 25 → 12 s). Callers must project the input to
-    * the scalar (key, score, tie) triple first — mapPartitions
-    * deserializes every column it is given, and feeding the fat
-    * vector/LUT rows through the heaps cost more than the window sort it
-    * replaced (30 s). Heap memory per task is keys×n rows.
-    */
-  private def topNPerKey(
-      df: DataFrame, key: String, score: String, tie: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    val enc = org.apache.spark.sql.Encoders.row(df.schema)
-    val ki = df.schema.fieldIndex(key)
-    val si = df.schema.fieldIndex(score)
-    val ti = df.schema.fieldIndex(tie)
-    // max-heap on (-score, tie): root = smallest score / largest tie =
-    // the worst kept row, replaced when a better one arrives
-    val ord = Ordering.by[(Double, Long, Row), (Double, Long)] {
-      case (s, t, _) => (-s, t)
-    }
-    // non-finite scores (a zero-norm corpus vector makes the ADC approx
-    // NaN/±Inf) break heap ordering — NaN fails both `s > ws` and
-    // `s == ws`, so such a row would squat in an underfull heap forever.
-    // One predicate excludes NaN and both infinities (NaN compares
-    // greater than everything in Spark, so `abs(s) < +Inf` is false).
-    val finite = df.filter(abs(col(score)) < lit(Double.PositiveInfinity))
-    val local = finite.mapPartitions { it =>
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long, Row)]]
-      it.foreach { r =>
-        val k = r.getLong(ki)
-        val s = r.getDouble(si)
-        val t = r.getLong(ti)
-        val h = heaps.getOrElseUpdate(k,
-          scala.collection.mutable.PriorityQueue.empty(ord))
-        if (h.size < n) h.enqueue((s, t, r))
-        else {
-          val (ws, wt, _) = h.head
-          if (s > ws || (s == ws && t < wt)) { h.dequeue(); h.enqueue((s, t, r)) }
-        }
-      }
-      heaps.valuesIterator.flatMap(_.iterator.map(_._3))
-    }(enc)
-    val w = Window.partitionBy(key).orderBy(col(score).desc, col(tie).asc)
-    local.withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= n).drop("__rk")
+    ivfSearch(probeSide(spread(probes), idCol, vecCol, excludeLabelCol),
+      assigned, mat, k, nProbe, broadcastProbes, excludeLabelCol.isDefined)
   }
 
   /** Product-quantization (PQ) approximate top-k with asymmetric distance
@@ -1187,77 +1271,23 @@ object VectorOps {
       m: Int = 4,
       codebookSize: Int = 16,
       refine: Int = 64): DataFrame = {
-    val c = spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
-    val sampleRows = sampleVecs(c, trainSampleSize(codebookSize))
-    val dim = sampleRows.head.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    // codebooks(j) = (≤ codebookSize) × sub matrix for subspace j,
-    // k-means-trained on the sample's subvectors
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m)(j =>
-      lloydLocal(sampleRows.map(_.slice(j * sub, (j + 1) * sub)),
-        codebookSize, TrainIters))
-    // encode: m fused argmin maps over sliced subvectors
-    val encoded = (0 until m).foldLeft(c) { (df, j) =>
-      df.withColumn(s"code$j",
-        graft.functions.VectorExpressions.nearestCentroid(
-          slice(col("cq"), j * sub + 1, sub), codebooks(j)))
-    }
-    // probe LUTs: dot(probe subvector, codeword) per (subspace, codeword)
-    val p = spread(probes)
-      .select(col(idCol).as("probe_id"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-    val withLuts = (0 until m).foldLeft(p) { (df, j) =>
-      df.withColumn(s"lut$j", array(codebooks(j).map(cw =>
-        dot(slice(col("pq"), j * sub + 1, sub),
-          typedlit(cw.toSeq))): _*))
-    }
-    // ADC score = sum of m table lookups on the corpus row's codes,
-    // divided by the row's exact norm: the LUT sum approximates the DOT
-    // product, but the ranking target is cosine — without the norm the
-    // candidate order biases toward long vectors (probe norm is constant
-    // within each probe's window, so only the corpus norm matters)
-    val approx = (0 until m).map(j =>
-      element_at(col(s"lut$j"), col(s"code$j") + 1)).reduce(_ + _) /
-      sqrt(col("cn2"))
-    // the heap phase sees ONLY (probe_id, corpus_id, approx) — selecting
-    // the scalar triple BEFORE candidate selection keeps the 100M-row
-    // deserialization at 24 bytes/row; vectors re-join on the tiny
+    val c = corpusSide(spread(corpus), idCol, vecCol)
+    val codebooks =
+      trainCodebooks(sampleVecs(c, trainSampleSize(codebookSize)), m,
+        codebookSize)
+    val p = probeSide(spread(probes), idCol, vecCol)
+    // ADC score = the LUT sum divided by the row's exact norm: the sum
+    // approximates the DOT product, but the ranking target is cosine —
+    // without the norm the candidate order biases toward long vectors
+    // (probe norm is constant within each probe's window). The heap phase
+    // sees ONLY (probe_id, corpus_id, approx): vectors re-join on the tiny
     // refine-set afterwards (probes × refine rows)
-    val scored = encoded.join(broadcast(withLuts), lit(true))
-      .filter(col("probe_id") =!= col("corpus_id"))
-      .select(col("probe_id"), col("corpus_id"), approx.as("approx"))
-    val candidates = topNPerKey(scored, "probe_id", "approx", "corpus_id",
-      refine).select("probe_id", "corpus_id")
-    rerank(candidates, c, p, k)
+    val scored = scorePairs(
+      candidatePairs(pqEncode(c, "cq", codebooks), withLuts(p, codebooks)),
+      (adcSum(m) / sqrt(col("cn2"))).as("approx"))
+    rerank(refineSet(scored, refine, broadcastProbes = true), c, p, k)
   }
 
-  /** Scalar-quantization (SQ8) approximate top-k with exact re-rank — the
-    * third memory-bandwidth family member beside [[knnPq]]/[[knnIvfPq]]
-    * (FAISS ScalarQuantizer QT_8bit): every DIMENSION is linearly
-    * re-coded into one byte against per-dimension [min, max] ranges, so
-    * the corpus scans at 1 byte/dim (8× less than quantized doubles)
-    * with NO codebook — decode is an affine map with bounded per-dim
-    * error delta/2, and unlike PQ the approximation never collapses two
-    * distinct subvectors to one codeword.
-    *
-    * Train: per-dimension min/max is ONE exact partial-agg pass over the
-    * corpus — min/max are order-free and mergeable, so (unlike Lloyd's
-    * codebooks) no sample is needed and the "model" is 2×dim doubles.
-    * Constant dimensions get delta = 1 (codes are 0 there; decode returns
-    * the constant exactly). Encode: one fused codegen'd byte-pack map
-    * ([[graft.functions.Sq8Encode]]) in the scan stage.
-    *
-    * Score: dot(p, decode(codes)) = dot(p, mins) + Σ (p_i·delta_i)·code_i
-    * — per probe, the first term is one scalar and p_i·delta_i
-    * precomputes, leaving a fused byte-unpack multiply-add per pair
-    * ([[graft.functions.Sq8Dot]]); candidates top-`refine` by the
-    * approximation then exact-cosine re-rank, as in knnPq. Linear scan,
-    * query-mode (probes broadcast): compose with [[knnIvf]] lists when
-    * sub-linear candidates are needed.
-    */
   /** A trained SQ8 range model: per-dimension [min, delta] — 2×dim
     * doubles, the cheapest "index" in the family. Persisted as plain
     * parquet (dim, min, delta) rows, the IvfModel convention: train once
@@ -1287,8 +1317,7 @@ object VectorOps {
     */
   def trainSq8Model(
       corpus: DataFrame, idCol: String, vecCol: String): Sq8Model =
-    trainSq8From(spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq")))
+    trainSq8From(corpusCodes(spread(corpus), idCol, vecCol))
 
   private[graft] def trainSq8From(c: DataFrame): Sq8Model = {
     val dim = sampleVecs(c, 1).head.length
@@ -1305,6 +1334,30 @@ object VectorOps {
     Sq8Model(mins, deltas)
   }
 
+  /** Scalar-quantization (SQ8) approximate top-k with exact re-rank — the
+    * third memory-bandwidth family member beside [[knnPq]]/[[knnIvfPq]]
+    * (FAISS ScalarQuantizer QT_8bit): every DIMENSION is linearly
+    * re-coded into one byte against per-dimension [min, max] ranges, so
+    * the corpus scans at 1 byte/dim (8× less than quantized doubles)
+    * with NO codebook — decode is an affine map with bounded per-dim
+    * error delta/2, and unlike PQ the approximation never collapses two
+    * distinct subvectors to one codeword.
+    *
+    * Train: per-dimension min/max is ONE exact partial-agg pass over the
+    * corpus — min/max are order-free and mergeable, so (unlike Lloyd's
+    * codebooks) no sample is needed and the "model" is 2×dim doubles.
+    * Constant dimensions get delta = 1 (codes are 0 there; decode returns
+    * the constant exactly). Encode: one fused codegen'd byte-pack map
+    * ([[graft.functions.Sq8Encode]]) in the scan stage.
+    *
+    * Score: dot(p, decode(codes)) = dot(p, mins) + Σ (p_i·delta_i)·code_i
+    * — per probe, the first term is one scalar and p_i·delta_i
+    * precomputes, leaving a fused byte-unpack multiply-add per pair
+    * ([[graft.functions.Sq8Dot]]); candidates top-`refine` by the
+    * approximation then exact-cosine re-rank, as in knnPq. Linear scan,
+    * query-mode (probes broadcast): compose with [[knnIvf]] lists when
+    * sub-linear candidates are needed.
+    */
   def knnSq8(
       probes: DataFrame,
       corpus: DataFrame,
@@ -1313,9 +1366,7 @@ object VectorOps {
       k: Int,
       refine: Int = 64,
       model: Option[Sq8Model] = None): DataFrame = {
-    val c = spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
+    val c = corpusSide(spread(corpus), idCol, vecCol)
     val m = model.getOrElse(trainSq8From(c))
     knnSq8PreEncoded(probes, encodeSq8(c, m), idCol, vecCol, m, k, refine)
   }
@@ -1328,8 +1379,7 @@ object VectorOps {
     */
   def encodeSq8(c: DataFrame, m: Sq8Model): DataFrame =
     c.select(col("corpus_id"), col("cq"), col("cn2"),
-      graft.functions.VectorExpressions.sq8Encode(col("cq"), m.mins, m.deltas)
-        .as("codes"))
+      V.sq8Encode(col("cq"), m.mins, m.deltas).as("codes"))
 
   /** [[knnSq8]] against a PRE-ENCODED corpus table
     * ((corpus_id, cq, cn2, codes), from [[encodeSq8]]) and its model —
@@ -1345,42 +1395,11 @@ object VectorOps {
       m: Sq8Model,
       k: Int,
       refine: Int = 64): DataFrame = {
-    val p = spread(probes)
-      .select(col(idCol).as("probe_id"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-    // per-probe precompute: scalar base term + delta-scaled probe vector
-    // (zip_with is CodegenFallback but runs once per PROBE, not per pair)
-    val withSp = p
-      .withColumn("base", dot(col("pq"), typedlit(m.mins.toSeq)))
-      .withColumn("sp",
-        zip_with(col("pq"), typedlit(m.deltas.toSeq), (a, b) => a * b))
-    val approx = (col("base") +
-      graft.functions.VectorExpressions.sq8Dot(col("sp"), col("codes"))) /
-      sqrt(col("cn2"))
-    val scored = encoded.join(broadcast(withSp), lit(true))
-      .filter(col("probe_id") =!= col("corpus_id"))
-      .select(col("probe_id"), col("corpus_id"), approx.as("approx"))
-    val candidates = topNPerKey(scored, "probe_id", "approx", "corpus_id",
-      refine).select("probe_id", "corpus_id")
-    rerank(candidates, encoded.select("corpus_id", "cq", "cn2"), p, k)
-  }
-
-  /** Exact cosine top-`k` over a small (probe_id, corpus_id) candidate
-    * set: vectors re-attach via one narrow corpus join + a probe join
-    * (broadcast in query mode, shuffled when the probe set is a large
-    * relation), then a window over ≤ refine rows per probe.
-    */
-  private def rerank(
-      candidates: DataFrame, c: DataFrame, p: DataFrame, k: Int,
-      broadcastProbes: Boolean = true): DataFrame = {
-    val wk = Window.partitionBy("probe_id")
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    val probeSide = if (broadcastProbes) broadcast(p) else p
-    candidates.join(c, "corpus_id").join(probeSide, "probe_id")
-      .select(col("probe_id"), col("corpus_id"),
-        cosine(dot(col("pq"), col("cq")), col("pn2"), col("cn2")).as("cos"))
-      .withColumn("rk", row_number().over(wk))
-      .filter(col("rk") <= k)
+    val p = probeSide(spread(probes), idCol, vecCol)
+    val scored = scorePairs(candidatePairs(encoded, withSq8Terms(p, m)),
+      sq8Approx)
+    rerank(refineSet(scored, refine, broadcastProbes = true),
+      encoded.select("corpus_id", "cq", "cn2"), p, k)
   }
 
   /** Materialized IVFPQ encode — the standing CODED LISTS table
@@ -1398,36 +1417,19 @@ object VectorOps {
       corpusFilter: Column = lit(true),
       labelCol: Option[String] = None): DataFrame =
     encodeQuantizedIvfPq(
-      spread(corpus).filter(corpusFilter)
-        .select(col(idCol).as("corpus_id") +:
-          labelCol.map(l => col(l).as("c_label")).toSeq :+
-          quantize(col(vecCol)).as("cq"): _*),
+      corpusCodes(spread(corpus).filter(corpusFilter), idCol, vecCol, labelCol),
       model)
 
   /** [[encodeIvfPq]] over the internal (corpus_id, cq) projection. */
   private[graft] def encodeQuantizedIvfPq(
       c: DataFrame, model: IvfPqModel): DataFrame = {
     val rawCents = model.rawCentroids
-    val sub = rawCents.head.length / model.m
-    val ivfMat: Array[Array[Double]] = normalized(rawCents)
-    val assigned = c
-      .withColumn("cn2", norm2(col("cq")))
-      .withColumn("list",
-        graft.functions.VectorExpressions.nearestCentroid(col("cq"), ivfMat))
-      .withColumn("resid", lit(1.0) -
-        graft.functions.VectorExpressions.centroidDot(
-          col("cq"), col("list"), ivfMat) / sqrt(col("cn2")))
+    val assigned = assignQuantized(c, IvfModel(normalized(rawCents)))
     // encode target: the raw vector, or its residual vs the list centroid
-    val encBase =
-      if (model.residual) assigned.withColumn("rq",
-        graft.functions.VectorExpressions.centroidResidual(
-          col("cq"), col("list"), rawCents))
-      else assigned.withColumn("rq", col("cq"))
-    (0 until model.m).foldLeft(encBase) { (df, j) =>
-      df.withColumn(s"code$j",
-        graft.functions.VectorExpressions.nearestCentroid(
-          slice(col("rq"), j * sub + 1, sub), model.codebooks(j)))
-    }.drop("rq")
+    val encBase = assigned.withColumn("rq",
+      if (model.residual) V.centroidResidual(col("cq"), col("list"), rawCents)
+      else col("cq"))
+    pqEncode(encBase, "rq", model.codebooks).drop("rq")
   }
 
   /** [[knnIvfPq]] over a PRE-ENCODED corpus ([[encodeIvfPq]] output):
@@ -1494,9 +1496,6 @@ object VectorOps {
       model: Option[IvfPqModel] = None,
       excludeLabelCol: Option[String] = None): DataFrame = {
     val cSrc = spread(corpus)
-    val c = cSrc
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
     // models (centroids + codebooks) train on the FULL corpus — the
     // standing shared index; `corpusFilter` (r7, the knnIvf convention)
     // is a row-local metadata predicate applied before assignment/encode,
@@ -1514,16 +1513,12 @@ object VectorOps {
       val dim = mm.rawCentroids.head.length
       require(dim % m == 0, s"model dim $dim not divisible by m=$m")
     }
-    val mdl = model.getOrElse(
-      trainIvfPqFrom(c, nCentroids, m, codebookSize, residual))
+    val mdl = model.getOrElse(trainIvfPqFrom(corpusCodes(cSrc, idCol, vecCol),
+      nCentroids, m, codebookSize, residual))
     // encode stage = the standing-table builder, so inline and
     // pre-encoded queries score IDENTICAL coded rows (spec-asserted)
-    val encoded = encodeQuantizedIvfPq(
-      cSrc.filter(corpusFilter)
-        .select(col(idCol).as("corpus_id") +:
-          excludeLabelCol.map(l => col(l).as("c_label")).toSeq :+
-          quantize(col(vecCol)).as("cq"): _*),
-      mdl)
+    val encoded = encodeQuantizedIvfPq(corpusCodes(cSrc.filter(corpusFilter),
+      idCol, vecCol, excludeLabelCol), mdl)
     ivfPqProbe(encoded, probes, idCol, vecCol, mdl, k, nProbe, refine,
       broadcastProbes, excludeLabelCol)
   }
@@ -1544,65 +1539,25 @@ object VectorOps {
       broadcastProbes: Boolean,
       excludeLabelCol: Option[String]): DataFrame = {
     val rawCents = mdl.rawCentroids
-    val codebooks = mdl.codebooks
-    val m = mdl.m
-    val sub = rawCents.head.length / m
-    val ivfMat: Array[Array[Double]] = normalized(rawCents)
-    val residual = mdl.residual
-    val p = spread(probes)
-      .select(col(idCol).as("probe_id") +:
-        excludeLabelCol.map(l => col(l).as("p_label")).toSeq :+
-        quantize(col(vecCol)).as("pq"): _*)
-      .withColumn("pn2", norm2(col("pq")))
-    val withLuts = (0 until m).foldLeft(p) { (df, j) =>
-      df.withColumn(s"lut$j", array(codebooks(j).map(cw =>
-        dot(slice(col("pq"), j * sub + 1, sub),
-          typedlit(cw.toSeq))): _*))
-    }
-    val probeLists0 = withLuts.select(
-      (col("probe_id") +: col("pq") +: col("pn2") +:
-        (excludeLabelCol.map(_ => col("p_label")).toSeq ++
-          (0 until m).map(j => col(s"lut$j")))) :+
-        explode(graft.functions.VectorExpressions.nearestCentroids(
-          col("pq"), ivfMat, nProbe)).as("list"): _*)
-    // residual mode's first-order term: dot(probe, c_list) per probed list
-    val probeLists =
-      if (residual) probeLists0.withColumn("pcdot",
-        graft.functions.VectorExpressions.centroidDot(
-          col("pq"), col("list"), rawCents))
-      else probeLists0.withColumn("pcdot", lit(0.0))
-    val approx = (col("pcdot") + (0 until m).map(j =>
-      element_at(col(s"lut$j"), col(s"code$j") + 1)).reduce(_ + _)) /
-      sqrt(col("cn2"))
+    val p = probeSide(spread(probes), idCol, vecCol, excludeLabelCol)
+    val lists = probedLists(withLuts(p, mdl.codebooks),
+      Seq("probe_id", "pq", "pn2") ++ excludeLabelCol.map(_ => "p_label") ++
+        (0 until mdl.m).map(j => s"lut$j"),
+      normalized(rawCents), nProbe)
+      // residual mode's first-order term: dot(probe, c_list) per probed list
+      .withColumn("pcdot",
+        if (mdl.residual) V.centroidDot(col("pq"), col("list"), rawCents)
+        else lit(0.0))
     // narrow triple into candidate selection; vectors re-join on the
-    // refine-set. Query mode (broadcastProbes): LUT rows broadcast and
-    // candidates come from partition-local bounded heaps (few keys —
-    // heap state is keys×refine rows per task). Batch mode: probes are a
-    // large relation — shuffled equi-join on `list`, and candidate
-    // selection is a row_number window, which distributes because
-    // rows-per-probe is bounded by the probed list sizes while heap
-    // state would be millions of keys per task.
-    val probeSide = if (broadcastProbes) broadcast(probeLists) else probeLists
-    val joined0 = encoded.join(probeSide, "list")
-      .filter(col("probe_id") =!= col("corpus_id"))
-    // hard-negative mode: label inequality filters BEFORE the refine-set
-    // selection, so the refine candidates (and hence the re-rank) are
-    // label-valid — no over-fetch; nProbe is the recall dial (knnIvf)
-    val joined = excludeLabelCol.fold(joined0)(_ =>
-      joined0.filter(!(col("p_label") <=> col("c_label"))))
-    val scored = joined
-      .select(col("probe_id"), col("corpus_id"), approx.as("approx"))
-    val candidates = (if (broadcastProbes) {
-      topNPerKey(scored, "probe_id", "approx", "corpus_id", refine)
-    } else {
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("approx").desc, col("corpus_id").asc)
-      scored.filter(abs(col("approx")) < lit(Double.PositiveInfinity))
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= refine)
-    }).select("probe_id", "corpus_id")
-    rerank(candidates, encoded.select("corpus_id", "cq", "cn2"), p, k,
-      broadcastProbes)
+    // refine-set. Hard-negative mode: the label inequality filters BEFORE
+    // the refine-set selection, so the refine candidates (and hence the
+    // re-rank) are label-valid — no over-fetch; nProbe is the recall dial
+    val scored = scorePairs(
+      candidatePairs(encoded, lists, Some("list"), broadcastProbes),
+      ((col("pcdot") + adcSum(mdl.m)) / sqrt(col("cn2"))).as("approx"),
+      excludeLabelCol.isDefined)
+    rerank(refineSet(scored, refine, broadcastProbes),
+      encoded.select("corpus_id", "cq", "cn2"), p, k, broadcastProbes)
   }
 
   /** IVF + SQ8 composed — the FAISS `IVF,SQ8` shape, the most common
@@ -1631,44 +1586,18 @@ object VectorOps {
       broadcastProbes: Boolean = true,
       ivfModel: Option[IvfModel] = None,
       sq8Model: Option[Sq8Model] = None): DataFrame = {
-    val c = spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
+    val c = corpusSide(spread(corpus), idCol, vecCol)
     val ivfMat = ivfModel.getOrElse(trainIvfFrom(c, nCentroids)).centroids
     val sq8 = sq8Model.getOrElse(trainSq8From(c))
-    val encoded = c
-      .withColumn("list",
-        graft.functions.VectorExpressions.nearestCentroid(col("cq"), ivfMat))
+    val encoded = c.withColumn("list", V.nearestCentroid(col("cq"), ivfMat))
       .select(col("corpus_id"), col("cn2"), col("list"),
-        graft.functions.VectorExpressions
-          .sq8Encode(col("cq"), sq8.mins, sq8.deltas).as("codes"))
-    val p = spread(probes)
-      .select(col(idCol).as("probe_id"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-    val probeLists = p
-      .withColumn("base", dot(col("pq"), typedlit(sq8.mins.toSeq)))
-      .withColumn("sp",
-        zip_with(col("pq"), typedlit(sq8.deltas.toSeq), (a, b) => a * b))
-      .select(col("probe_id"), col("pq"), col("pn2"), col("base"), col("sp"),
-        explode(graft.functions.VectorExpressions.nearestCentroids(
-          col("pq"), ivfMat, nProbe)).as("list"))
-    val probeSide = if (broadcastProbes) broadcast(probeLists) else probeLists
-    val scored = encoded.join(probeSide, "list")
-      .filter(col("probe_id") =!= col("corpus_id"))
-      .select(col("probe_id"), col("corpus_id"),
-        ((col("base") +
-          graft.functions.VectorExpressions.sq8Dot(col("sp"), col("codes"))) /
-          sqrt(col("cn2"))).as("approx"))
-    val candidates = (if (broadcastProbes) {
-      topNPerKey(scored, "probe_id", "approx", "corpus_id", refine)
-    } else {
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("approx").desc, col("corpus_id").asc)
-      scored.filter(abs(col("approx")) < lit(Double.PositiveInfinity))
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= refine)
-    }).select("probe_id", "corpus_id")
-    rerank(candidates, c, p, k, broadcastProbes)
+        V.sq8Encode(col("cq"), sq8.mins, sq8.deltas).as("codes"))
+    val p = probeSide(spread(probes), idCol, vecCol)
+    val lists = probedLists(withSq8Terms(p, sq8),
+      Seq("probe_id", "pq", "pn2", "base", "sp"), ivfMat, nProbe)
+    val scored = scorePairs(
+      candidatePairs(encoded, lists, Some("list"), broadcastProbes), sq8Approx)
+    rerank(refineSet(scored, refine, broadcastProbes), c, p, k, broadcastProbes)
   }
 
   /** LSH-bucketed approximate top-k: corpus hashed once; probes multi-probe
@@ -1700,34 +1629,23 @@ object VectorOps {
       planes: Int = 12,
       maxFlips: Int = 2,
       broadcastProbes: Boolean = true): DataFrame = {
-    val c = spread(corpus)
-      .select(col(idCol).as("corpus_id"), quantize(col(vecCol)).as("cq"))
-      .withColumn("cn2", norm2(col("cq")))
+    val c = corpusSide(spread(corpus), idCol, vecCol)
       .withColumn("bucket", lshBucket(col("cq"), planes))
-    val p0 = spread(probes)
-      .select(col(idCol).as("probe_id"), quantize(col(vecCol)).as("pq"))
-      .withColumn("pn2", norm2(col("pq")))
-      .withColumn("b0", lshBucket(col("pq"), planes))
     // all XOR masks with at most maxFlips bits set (statically enumerated
     // via combinations — O(C(planes, maxFlips)), not O(2^planes))
     val masks = (0 to maxFlips).flatMap(f =>
       (0 until planes).combinations(f)
         .map(_.foldLeft(0L)((acc, b) => acc | (1L << b))))
-    val p = p0.select(col("probe_id"), col("pq"), col("pn2"),
-      explode(array(masks.map(m => col("b0").bitwiseXOR(lit(m))): _*))
-        .as("bucket"))
-    val probeSide = if (broadcastProbes) broadcast(p) else p
-    // non-finite cosines excluded before the window — see knnIvf
-    val scored = c.join(probeSide, "bucket")
-      .filter(col("probe_id") =!= col("corpus_id"))
+    val p = probeSide(spread(probes), idCol, vecCol)
+      .withColumn("b0", lshBucket(col("pq"), planes))
+      .select(col("probe_id"), col("pq"), col("pn2"),
+        explode(array(masks.map(m => col("b0").bitwiseXOR(lit(m))): _*))
+          .as("bucket"))
+    // a pair sharing several probed buckets is scored once; non-finite
+    // cosines are excluded before the window (the ANN convention)
+    val pairs = candidatePairs(c, p, Some("bucket"), broadcastProbes)
       .dropDuplicates("probe_id", "corpus_id")
-      .select(col("probe_id"), col("corpus_id"),
-        cosine(dot(col("pq"), col("cq")), col("pn2"), col("cn2")).as("cos"))
-      .filter(abs(col("cos")) < lit(Double.PositiveInfinity))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos").desc, col("corpus_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topK(scorePairs(pairs, exactCos).filter(finite("cos")), k)
   }
 
   /** Deterministic Lloyd's k-means over quantized embeddings —
@@ -1776,9 +1694,7 @@ object VectorOps {
     require(k > 0 && iters > 0 && nAssign > 0)
     val spark = df.sparkSession
     import spark.implicits._
-    val c = spread(df)
-      .select(col(idCol).as("id"), quantize(col(vecCol)).as("q"))
-      .withColumn("n2", norm2(col("q")))
+    val c = vectors(spread(df), idCol, vecCol, "id", "q", "n2")
       .localCheckpoint() // reused every iteration
     // deterministic seed: k vectors in xxhash64-id order (same trick as
     // knnIvf — reproducible with no stored model)
@@ -1801,7 +1717,7 @@ object VectorOps {
         // out of the argmin; ties break to the lowest cluster id both
         // ways).
         c.withColumn("cluster",
-            graft.functions.VectorExpressions.nearestCentroid(
+            V.nearestCentroid(
               col("q"), cents.map(_._2)))
           .join(centDf, "cluster")
           .select(col("id"), col("q"), col("cluster"),
@@ -1813,7 +1729,7 @@ object VectorOps {
         // a map + posexplode to n rows + one broadcast join for dist2,
         // never the N×k scored self-blow-up through a window sort
         c.select(col("id"), col("q"), col("n2"),
-            posexplode(graft.functions.VectorExpressions.nearestCentroids(
+            posexplode(V.nearestCentroids(
               col("q"), cents.map(_._2), n)).as(Seq("crk0", "cluster")))
           .join(centDf, "cluster")
           .select(col("id"), col("q"), col("cluster"),
@@ -1826,7 +1742,7 @@ object VectorOps {
       // Lloyd update: only (cluster, q) matter — assignment via the fused
       // argmin map, sums via posexplode + map-side partial aggregation
       val sums = c
-        .select(graft.functions.VectorExpressions.nearestCentroid(
+        .select(V.nearestCentroid(
             col("q"), cents.map(_._2)).as("cluster"),
           posexplode(col("q")).as(Seq("pos", "x")))
         .groupBy("cluster", "pos")

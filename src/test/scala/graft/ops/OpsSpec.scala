@@ -2,6 +2,7 @@ package graft.ops
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -1275,6 +1276,155 @@ class VectorOpsSpec extends SparkSpec {
         "vec_id", "embedding", 3)
       .orderBy("rk").collect().map(_.getAs[Long]("corpus_id")).toSeq
     assert(r == Seq(1L, 2L, 3L)) // near-dup, orthogonal(0), opposite(-1)
+  }
+
+  /** Whether `t`, its causes or its suppressed errors mention `what`:
+    * adaptive execution may wrap a failing stage's error.
+    */
+  private def mentions(t: Throwable, what: String): Boolean = t != null &&
+    (String.valueOf(t.getMessage).contains(what) ||
+      mentions(t.getCause, what) || t.getSuppressed.exists(mentions(_, what)))
+
+  /** Run `body` with session confs set, restoring the previous values. */
+  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("degenerate vectors: a zero-norm corpus vector and a probe that is " +
+    "also in the corpus — pinned columns, no self-pair, exact rows for " +
+    "every search entry point (ANSI: divide-by-zero; otherwise the brute " +
+    "paths keep the NULL-cosine row and the ANN paths drop it)") {
+    val corpus = vecs.union(Seq((4L, Array(0.0f, 0.0f, 0.0f)))
+        .toDF("vec_id", "embedding"))
+      .withColumn("label", $"vec_id" % 3 === 0)
+    val probe = corpus.filter($"vec_id" === 0)
+    val (id, v) = ("vec_id", "embedding")
+    val ivf = VectorOps.trainIvfModel(corpus, id, v, nCentroids = 2)
+    val sq8 = VectorOps.trainSq8Model(corpus, id, v)
+    val pq = VectorOps.trainIvfPqModel(corpus, id, v, nCentroids = 2,
+      m = 3, codebookSize = 4)
+    val internal = corpus.select($"vec_id".as("corpus_id"),
+        VectorOps.quantize($"embedding").as("cq"))
+      .withColumn("cn2", VectorOps.norm2($"cq"))
+    def ivfRuns(b: Boolean): Seq[(String, () => DataFrame)] = Seq(
+      "knnIvf" -> (() => VectorOps.knnIvf(probe, corpus, id, v, 4,
+        nCentroids = 2, nProbe = 2, broadcastProbes = b)),
+      "knnIvfPreAssigned" -> (() => VectorOps.knnIvfPreAssigned(probe,
+        VectorOps.assignLists(corpus, id, v, ivf), id, v, 4, ivf,
+        nProbe = 2, broadcastProbes = b)),
+      "hardNegativesIvf" -> (() => VectorOps.hardNegativesIvf(probe, corpus,
+        id, v, "label", 4, nCentroids = 2, nProbe = 2, broadcastProbes = b)),
+      "knnIvfPq" -> (() => VectorOps.knnIvfPq(probe, corpus, id, v, 4,
+        nCentroids = 2, nProbe = 2, m = 3, codebookSize = 4, refine = 8,
+        broadcastProbes = b)),
+      "knnIvfPqPreEncoded" -> (() => VectorOps.knnIvfPqPreEncoded(probe,
+        VectorOps.encodeIvfPq(corpus, id, v, pq), id, v, pq, 4,
+        nProbe = 2, refine = 8, broadcastProbes = b)),
+      "knnIvfSq8" -> (() => VectorOps.knnIvfSq8(probe, corpus, id, v, 4,
+        nCentroids = 2, nProbe = 2, refine = 8, broadcastProbes = b)),
+      "knnLsh" -> (() => VectorOps.knnLsh(probe, corpus, id, v, 4,
+        planes = 4, broadcastProbes = b)))
+    val runs: Seq[(String, () => DataFrame)] = Seq(
+      "knnBrute" -> (() => VectorOps.knnBrute(probe, corpus, id, v, 4)),
+      "hardNegatives" -> (() => VectorOps.hardNegatives(probe, corpus, id,
+        v, "label", 4)),
+      "knnPq" -> (() => VectorOps.knnPq(probe, corpus, id, v, 4, m = 3,
+        codebookSize = 4, refine = 8)),
+      "knnSq8" -> (() => VectorOps.knnSq8(probe, corpus, id, v, 4)),
+      "knnSq8PreEncoded" -> (() => VectorOps.knnSq8PreEncoded(probe,
+        VectorOps.encodeSq8(internal, sq8), id, v, sq8, 4)),
+      "cosinePairs" -> (() => VectorOps.cosinePairs(corpus, id, v, 0.9)),
+      "semanticDecontaminate" -> (() => VectorOps.semanticDecontaminate(
+        corpus, probe, id, v, 0.5)),
+      "marginMine" -> (() => VectorOps.marginMine(probe, corpus, id, v,
+        k = 2)),
+      "mmrRerank" -> (() => VectorOps.mmrRerank(probe, corpus, id, v,
+        kCand = 4, kSel = 3)),
+      "ivfTuningCurve" -> (() => VectorOps.ivfTuningCurve(probe, corpus, id,
+        v, 4, nCentroids = 2, probeSweep = Seq(1, 2)))) ++
+      ivfRuns(true) ++ ivfRuns(false).map { case (n, f) => (s"$n/batch", f) }
+    // one line per entry point: its columns, then its rows sorted, or the
+    // error it fails with
+    def outcome(f: () => DataFrame): String =
+      try {
+        val df = f()
+        val got = df.collect()
+        if (df.columns.contains("probe_id") && df.columns.contains("corpus_id"))
+          assert(got.forall(r => r.getAs[Long]("probe_id") !=
+            r.getAs[Long]("corpus_id")), "self-pair returned")
+        df.columns.mkString(",") + " :: " +
+          got.map(_.toSeq.mkString("|")).sorted.mkString(" ;; ")
+      } catch {
+        case e: Throwable if mentions(e, "DIVIDE_BY_ZERO") =>
+          "throws DIVIDE_BY_ZERO"
+      }
+    // ANSI arithmetic (the session default): the zero norm divides by zero
+    // on every path whose candidates reach the zero vector
+    withConf("spark.sql.ansi.enabled" -> "true") {
+      runs.foreach { case (n, f) =>
+        assert(outcome(f) == "throws DIVIDE_BY_ZERO", n)
+      }
+    }
+    // non-ANSI: its cosine is NULL — the brute paths rank it last and keep
+    // it, the ANN paths drop it with the non-finite filter; LSH buckets
+    // never reach the opposite vector
+    val knn = "probe_id,corpus_id,cos,rk :: "
+    val (r1, r2, r3) = ("0|1|0.999949903614523|1", "0|2|0.0|2", "0|3|-1.0|3")
+    val ann = s"$knn$r1 ;; $r2 ;; $r3"
+    val ann2 = s"$knn$r1 ;; $r2"
+    val want = Map(
+      "knnBrute" -> s"$ann ;; 0|4|null|4",
+      "hardNegatives" -> s"$ann2 ;; 0|4|null|3",
+      "knnPq" -> ann, "knnSq8" -> ann, "knnSq8PreEncoded" -> ann,
+      "cosinePairs" -> "id_a,id_b,cos :: 0|1|0.999949903614523",
+      "semanticDecontaminate" ->
+        "train_id,eval_id,cos :: 0|0|1.0 ;; 1|0|0.999949903614523",
+      "marginMine" -> "lid,rid,cos,margin :: 0|0|1.0|1.0000125001562519",
+      "mmrRerank" -> ("probe_id,step,sel_id,score :: " +
+        "0|1|1|0.999949903614523 ;; 0|2|3|-5.009638547703865E-5 ;; " +
+        "0|3|2|-0.01000950854468992"),
+      "ivfTuningCurve" ->
+        "n_probe,n_hits,n_truth,recall :: 1|1|4|0.25 ;; 2|3|4|0.75") ++
+      Seq("", "/batch").flatMap(m => Seq(
+        s"knnIvf$m" -> ann, s"knnIvfPreAssigned$m" -> ann,
+        s"hardNegativesIvf$m" -> ann2, s"knnIvfPq$m" -> ann,
+        s"knnIvfPqPreEncoded$m" -> ann, s"knnIvfSq8$m" -> ann,
+        s"knnLsh$m" -> ann2))
+    assert(want.keySet == runs.map(_._1).toSet)
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      runs.foreach { case (n, f) => assert(outcome(f) == want(n), n) }
+    }
+  }
+
+  test("a model trained for another dimension fails loudly, naming both " +
+    "dimensions, in the generated and the interpreted path") {
+    val v16 = (0L until 6L).map(i =>
+      (i, Array.tabulate(16)(j => ((i * 7 + j) % 5).toFloat)))
+      .toDF("vec_id", "embedding")
+    val probe = v16.filter($"vec_id" === 0)
+    val ivf8 = VectorOps.IvfModel(Array.tabulate(8)(c =>
+      Array.tabulate(8)(j => if (j == c) 1.0 else 0.0)))
+    val sq8 = VectorOps.Sq8Model(Array.fill(8)(0.0), Array.fill(8)(1.0))
+    def fails(df: => DataFrame): Unit = {
+      val e = intercept[Exception](df.collect())
+      assert(mentions(e,
+        "vector dimension 16 does not match the model dimension 8"), e)
+    }
+    val generated = Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    for (mode <- Seq(generated, interpreted)) withConf(mode: _*) {
+      fails(VectorOps.knnIvf(probe, v16, "vec_id", "embedding", 2,
+        model = Some(ivf8)))
+      fails(VectorOps.knnSq8(probe, v16, "vec_id", "embedding", 2,
+        model = Some(sq8)))
+    }
   }
 
   test("mmrRerank displaces the near-duplicate of the first pick with " +
